@@ -34,6 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from search_spark.session import local_df
+
 # --------------------------------------------------------------------------
 # Gazetteer / ontology fixtures (FIXTURES.md §2, §4)
 # --------------------------------------------------------------------------
@@ -427,33 +429,33 @@ def generate_sameas_pairs(
 
 def gazetteer_df(spark: SparkSession) -> DataFrame:
     rows = [(t, e) for e, ts in GAZETTEER.items() for t in ts]
-    return spark.createDataFrame(rows, ["pattern", "entity_type"])
+    return local_df(spark, rows, "pattern string, entity_type string")
 
 
 def mining_schema_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         MINING_SCHEMA_ROWS,
-        ["entity_type", "property", "property_type", "property_value_type",
-         "ontology_source"],
+        "entity_type string, property string, property_type string, "
+        "property_value_type string, ontology_source string",
     )
 
 
 def relation_pairs_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(RELATION_PAIRS, ["subj_type", "obj_type"])
+    return local_df(spark, RELATION_PAIRS, "subj_type string, obj_type string")
 
 
 def concepts_df(spark: SparkSession, dim: int = 64) -> DataFrame:
     """Ontology concepts with deterministic hash-embeddings (FIXTURES.md §4)."""
     from search_spark.operators.linking import hash_embed
 
-    rows = []
-    for cid, aliases in CONCEPT_ALIASES.items():
-        rows.append(
-            {
-                "concept_id": cid,
-                "canonical_name": aliases[0],
-                "aliases": aliases,
-                "embedding": hash_embed(aliases[0], dim),
-            }
-        )
-    return spark.createDataFrame(pd.DataFrame(rows))
+    rows = [
+        (cid, aliases[0], aliases, hash_embed(aliases[0], dim))
+        for cid, aliases in CONCEPT_ALIASES.items()
+    ]
+    return local_df(
+        spark,
+        rows,
+        "concept_id string, canonical_name string, aliases array<string>, "
+        "embedding array<double>",
+    )

@@ -341,16 +341,19 @@ def forward_chain(
     identical to one that executes all rounds — the unrolled-CTE oracle
     relies on exactly this.
 
-    Per-round state is the distinct triple set: lineage truncates with an
-    eager ``checkpoints.truncate`` (strategy-switchable: localCheckpoint or
+    Per-round state is the distinct triple set: lineage truncates with a
+    lazy ``checkpoints.truncate`` (strategy-switchable: localCheckpoint or
     reliable file checkpoint — see search_spark/checkpoints.py) (the same loop discipline as
     connected-components and PageRank) and the convergence check is one
-    count per round — a scalar, not a collect of the data.
+    count per round — a scalar, not a collect of the data — which is
+    also the job that materializes the round's checkpoint.
 
     Returns the closed triple set ``(subj, pred, obj)``.
     """
+    # lazy checkpoints: each round's count is the one job that
+    # materializes that round's state
     current = triples.select("subj", "pred", "obj").distinct().transform(
-        _ckpt(eager=True)
+        _ckpt(eager=False)
     )
     n = current.count()
     for _ in range(max_rounds):
@@ -361,7 +364,9 @@ def forward_chain(
         if derived is None:
             break
         current = (
-            current.unionByName(derived).distinct().transform(_ckpt(eager=True))
+            current.unionByName(derived)
+            .distinct()
+            .transform(_ckpt(eager=False))
         )
         n_new = current.count()
         if n_new == n:

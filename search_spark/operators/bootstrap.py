@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from search_spark.session import local_df
+
 
 def pair_contexts(
     tokens: DataFrame, mentions: DataFrame, window: int = 4
@@ -204,6 +206,7 @@ def bootstrap_iterate(
             new_pairs.select("subj", "obj")
         ).cache()
     if out is None:
-        schema = "subj string, obj string, round long"
-        return tokens.sparkSession.createDataFrame([], schema=schema)
+        return local_df(
+            tokens.sparkSession, [], "subj string, obj string, round long"
+        )
     return out

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_spark.checkpoints import chain as _ckpt
+from search_spark.session import local_df
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -126,17 +127,22 @@ def connected_components(
     edges
         DataFrame with columns ``src``, ``dst``.
     local_threshold
-        Edge sets at or below this size skip the iterative loop: the edges
-        collect to the driver and a union-find computes the identical
-        result in one pass (same adaptive principle as AQE's
-        broadcast-join conversion — an alias graph of distinct surface
-        forms is usually tiny even when the corpus is not). Set ``0`` to
-        force the distributed path.
+        The distinct raw ``(src, dst)`` edges are checkpointed once and
+        counted. At or below this count the iterative loop is skipped:
+        the edges collect from that checkpoint and a driver union-find
+        computes the identical mapping in one pass (same adaptive
+        principle as AQE's broadcast-join conversion — an alias graph of
+        distinct surface forms is usually tiny even when the corpus is
+        not). The result is then a local relation built from the driver
+        rows, so the node set is never derived again. Set ``0`` to force
+        the distributed path.
 
     Returns
     -------
     DataFrame ``(id, component)`` — every node that appears in any edge,
     mapped to its component representative (the lexicographic minimum).
+    A node whose only edges are self-loops maps to itself; a NULL
+    endpoint is one ``(NULL, NULL)`` row and links nothing.
 
     The distributed path: each iteration materializes via
     ``checkpoints.truncate`` (cuts lineage) and the loop's shuffle width adapts
@@ -148,39 +154,42 @@ def connected_components(
     unlikely) hash collision is caught by the exact ``exceptAll``
     confirmation run once at apparent convergence.
     """
+    spark = edges.sparkSession
+    # lazy checkpoint: the gate's count is the job that materializes it
+    raw = edges.select("src", "dst").distinct().transform(_ckpt(eager=False))
     nodes = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
+        raw.select(F.col("src").alias("id"))
+        .unionByName(raw.select(F.col("dst").alias("id")))
         .distinct()
     )
+    if raw.count() <= local_threshold:
+        # tiny edge set → one driver pass replaces ~4 iterations × ~6
+        # Spark jobs each; the mapping ships back as a LocalTableScan
+        ids: set = set()
+        links = []
+        for src, dst in raw.collect():
+            ids.update((src, dst))
+            # the distributed path drops self-loops and NULL endpoints
+            # in _symmetrize (u != v is never true for a NULL)
+            if src is not None and dst is not None and src != dst:
+                links.append((src, dst))
+        comp = _local_components(links)
+        rows = [(x, comp.get(x, x)) for x in sorted(ids - {None})]
+        if None in ids:
+            rows.append((None, None))
+        t = nodes.schema["id"].dataType.simpleString()
+        return local_df(spark, rows, f"id {t}, component {t}")
     # canonical (greater → smaller) direction; the star steps re-symmetrize.
     # eager=False + fingerprint fuses truncation and convergence check
     # into ONE action: the fingerprint aggregate is the job that
     # materializes the checkpoint (VERDICT r4 item 6 — jobs/round is
     # what bounds small-graph iterative efficiency).
     cur = (
-        _symmetrize(edges)
+        _symmetrize(raw)
         .filter(F.col("u") > F.col("v"))
         .transform(_ckpt(eager=False))
     )
     n_cur, h_cur = _fingerprint(cur)
-    spark = edges.sparkSession
-
-    if n_cur <= local_threshold:
-        # tiny distinct edge set → one driver pass replaces ~4 iterations
-        # × ~6 Spark jobs each (measured ~5 s per pipeline run saved)
-        mapping_dict = _local_components(
-            [(r["u"], r["v"]) for r in cur.collect()]
-        )
-        if not mapping_dict:
-            return nodes.select("id", F.col("id").alias("component"))
-        mapping = spark.createDataFrame(
-            list(mapping_dict.items()), ["id", "component"]
-        )
-        return (
-            nodes.join(F.broadcast(mapping), on="id", how="left")
-            .select("id", F.coalesce("component", "id").alias("component"))
-        )
     width = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     # Width is scoped per-DataFrame (explicit repartition after each
     # checkpoint) rather than by mutating the session-global shuffle conf —

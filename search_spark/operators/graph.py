@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_spark.checkpoints import chain as _ckpt
+from search_spark.session import local_df
 
 
 def entity_degrees(edges: DataFrame) -> DataFrame:
@@ -110,10 +111,11 @@ def pagerank(
     from search_spark.joins import maybe_broadcast
 
     spark = edges.sparkSession
-    e = edges.select("src", "dst").distinct().transform(_ckpt(eager=True))
+    # lazy checkpoint: the count is the one job that materializes it
+    e = edges.select("src", "dst").distinct().transform(_ckpt(eager=False))
     n_edges = e.count()
     if n_edges == 0:
-        return spark.createDataFrame([], schema=_PR_SCHEMA)
+        return local_df(spark, [], _PR_SCHEMA)
     if n_edges <= local_threshold:
         init_rows = init_ranks.collect() if init_ranks is not None else None
         return _pagerank_local(spark, e.collect(), n_iter, damping,
@@ -264,8 +266,8 @@ def _pagerank_local(spark, edge_rows, n_iter: int, damping: float,
         for u, v in pairs:
             nxt[idx[v]] += damping * r[idx[u]] / out[idx[u]]
         r = nxt
-    return spark.createDataFrame(
-        [(name, float(r[idx[name]])) for name in names], schema=_PR_SCHEMA
+    return local_df(
+        spark, [(name, float(r[idx[name]])) for name in names], _PR_SCHEMA
     )
 
 
@@ -293,10 +295,11 @@ def personalized_pagerank(
     from search_spark.joins import maybe_broadcast
 
     spark = edges.sparkSession
-    e = edges.select("src", "dst").distinct().transform(_ckpt(eager=True))
+    # lazy checkpoint: the count is the one job that materializes it
+    e = edges.select("src", "dst").distinct().transform(_ckpt(eager=False))
     n_edges = e.count()
     if n_edges == 0:
-        return spark.createDataFrame([], schema=_PR_SCHEMA)
+        return local_df(spark, [], _PR_SCHEMA)
     seed_col = seeds.columns[0]
     seed_set = seeds.select(
         F.col(seed_col).alias("entity")
@@ -427,8 +430,8 @@ def _ppr_local(spark, edge_rows, seed_list, n_iter: int, damping: float):
         for u, v in pairs:
             nxt[idx[v]] += damping * r[idx[u]] / out[idx[u]]
         r = nxt
-    return spark.createDataFrame(
-        [(name, float(r[idx[name]])) for name in names], schema=_PR_SCHEMA
+    return local_df(
+        spark, [(name, float(r[idx[name]])) for name in names], _PR_SCHEMA
     )
 
 
@@ -827,12 +830,13 @@ def _hits_local(spark, edge_rows, n_iter: int) -> DataFrame:
         a = a / np.linalg.norm(a)
         h = A @ a
         h = h / np.linalg.norm(h)
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [
             (names[i], round(float(a[i]), 6), round(float(h[i]), 6))
             for i in range(n)
         ],
-        schema="entity string, authority double, hub double",
+        "entity string, authority double, hub double",
     )
 
 
@@ -862,7 +866,8 @@ def hits(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .transform(_ckpt(eager=True))  # reused 2× per iteration
+        # reused 2× per iteration; the count below materializes it
+        .transform(_ckpt(eager=False))
     )
     # same adaptive gate as pagerank: entity vocabularies are usually
     # tiny even when the corpus is not, and 8 rounds of paired Spark
@@ -871,8 +876,8 @@ def hits(
     spark = edges.sparkSession
     n_edges = de.count()
     if n_edges == 0:
-        return spark.createDataFrame(
-            [], schema="entity string, authority double, hub double"
+        return local_df(
+            spark, [], "entity string, authority double, hub double"
         )
     if n_edges <= local_threshold:
         return _hits_local(spark, de.collect(), n_iter)
@@ -953,8 +958,8 @@ def _lpa_local(spark, adj_rows, node_names, n_iter: int) -> DataFrame:
             top = max(counts.values())
             nxt[n] = min(la for la, c in counts.items() if c == top)
         labels = nxt
-    return spark.createDataFrame(
-        sorted(labels.items()), schema="entity string, community string"
+    return local_df(
+        spark, sorted(labels.items()), "entity string, community string"
     )
 
 
@@ -1132,6 +1137,20 @@ def two_hop(edges: DataFrame) -> DataFrame:
     )
 
 
+#: largest ``max_hops`` the BFS family accepts. ``landmark_closeness``
+#: sums the integer ``lcm(1..max_hops) / dist`` per landmark; at 15 the
+#: lcm is 360,360, so every term and any realistic landmark sum stays an
+#: exact integer in the double division and the long accumulator.
+MAX_BFS_HOPS = 15
+
+
+def _check_max_hops(max_hops: int) -> None:
+    if not 1 <= max_hops <= MAX_BFS_HOPS:
+        raise ValueError(
+            f"max_hops must be in 1..{MAX_BFS_HOPS}, got {max_hops}"
+        )
+
+
 def bfs_distances(
     edges: DataFrame, seeds: DataFrame, max_hops: int = 4
 ) -> DataFrame:
@@ -1151,7 +1170,10 @@ def bfs_distances(
     same loop discipline as :func:`pagerank` and the connected-components
     canonicalizer. Expanding only the newly-discovered frontier keeps the
     per-round join |frontier| × outdeg, not |reached| × outdeg.
+
+    Raises ``ValueError`` unless ``1 <= max_hops <= MAX_BFS_HOPS``.
     """
+    _check_max_hops(max_hops)
     e = (
         edges.select("src", "dst")
         .distinct()
@@ -1204,8 +1226,10 @@ def multi_source_bfs(
 
     Returns ``(landmark, entity, dist)`` for every vertex reachable
     within ``max_hops`` directed hops of each landmark (the landmark
-    itself at distance 0).
+    itself at distance 0). Raises ``ValueError`` unless
+    ``1 <= max_hops <= MAX_BFS_HOPS``.
     """
+    _check_max_hops(max_hops)
     e = (
         edges.select("src", "dst")
         .distinct()
@@ -1291,9 +1315,12 @@ def landmark_closeness(
     divides the lcm) and divides once at the end, so the result is
     bit-identical regardless of partial-aggregation order and across
     engines; a float ``Σ 1/dist`` would be summation-order-dependent.
+    That argument holds only for ``1 <= max_hops <= MAX_BFS_HOPS``;
+    anything else raises ``ValueError``.
     """
     from math import lcm
 
+    _check_max_hops(max_hops)
     unit = lcm(*range(1, max_hops + 1))
     lmk = select_landmarks(edges, n_landmarks)
     d = multi_source_bfs(edges, lmk, max_hops=max_hops)
@@ -1341,8 +1368,12 @@ def wl_role_labels(
       convergence check, canonicalize.py) rendered as its decimal
       string. Per-vertex state is O(1) regardless of degree, the
       aggregate partial-combines, and hub skew collapses into partial
-      sums. Classes agree with ``sorted`` up to hash collisions
-      (astronomically unlikely; asserted on random graphs in tests).
+      sums. Classes agree with ``sorted`` up to hash collisions: a
+      single 64-bit xxhash sum has a birthday bound of about 2^32, so
+      among n distinct signatures some pair collides with probability
+      about n²/2^65, and a silent class merge becomes likely near 2^32
+      (about 4·10^9) distinct signatures. Agreement is asserted on
+      random graphs in tests.
 
     Per round: two joins of the label state onto the counted edge table
     (in- and out-direction) + two partial-combined signature aggregates

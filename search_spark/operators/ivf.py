@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from search_spark.checkpoints import chain as _ckpt
+from search_spark.session import local_df
 
 
 def _assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -75,9 +76,10 @@ def train_ivf(
     seeds = vecs.orderBy("id").limit(n_cells).collect()
     if len(seeds) < n_cells:
         raise ValueError(f"need ≥ {n_cells} vectors, got {len(seeds)}")
-    centroids = spark.createDataFrame(
+    centroids = local_df(
+        spark,
         [(i, list(r["v_arr"]), 1) for i, r in enumerate(seeds)],
-        ["cell", "c_arr", "k"],
+        "cell bigint, c_arr array<double>, k bigint",
     ).transform(_ckpt(eager=True))
 
     prev_assign: DataFrame | None = None

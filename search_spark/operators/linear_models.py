@@ -38,6 +38,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from search_spark.session import local_df
+
 # search_spark/operators/linear_models.py → repo root → models/
 MODELS_DIR = os.path.join(
     os.path.dirname(
@@ -194,7 +196,8 @@ def weights_row(spark, parquet_path: str, feature_order) -> DataFrame:
             f"weights_row({parquet_path}): artifact drift vs "
             f"feature_order — unknown={unknown}, missing={missing}"
         )
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [([seen[f] for f in order], seen["__bias__"])],
         "_w array<double>, _b double",
     )

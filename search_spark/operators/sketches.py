@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from search_spark.session import local_df
+
 HASH_BITS = 48  # 12 hex chars per md5 half
 HASH_MOD = 1 << HASH_BITS
 R_DEFAULT = 32
@@ -277,8 +279,10 @@ def cms_point_estimates(
     joins the broadcast sketch; estimate = MIN over depth rows (absent
     bucket → 0). Returns ``(term, est_count)``."""
     spark = sketch.sparkSession
-    probes = spark.createDataFrame(
-        [(t, d) for t in terms for d in range(depth)], ["term", "d"]
+    probes = local_df(
+        spark,
+        [(t, d) for t in terms for d in range(depth)],
+        "term string, d bigint",
     )
     h1, h2 = _hash_halves(F.col("term"))
     probes = probes.withColumn(

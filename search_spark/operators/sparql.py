@@ -126,6 +126,7 @@ from search_spark.operators.paths import (
     eval_path,
     normalize,
 )
+from search_spark.session import local_df
 
 #: engine bound for the SPARQL ``+`` (one-or-more) path modifier — the
 #: semi-naive Repeat loop exits early on an empty delta, so any bound at
@@ -1503,11 +1504,11 @@ def _compile_path_pattern(
         )
     spark = triples.sparkSession
     if not svar:
-        seed = spark.createDataFrame([(subj,)], "src string")
+        seed = local_df(spark, [(subj,)], "src string")
         pairs = eval_path(triples, expr, seed)
         return pairs.select(F.col("dst").alias(obj[1:])).distinct()
     if not ovar:
-        seed = spark.createDataFrame([(obj,)], "src string")
+        seed = local_df(spark, [(obj,)], "src string")
         pairs = eval_path(triples, normalize(expr, flip=True), seed)
         return pairs.select(F.col("dst").alias(subj[1:])).distinct()
     pairs = eval_path(triples, expr)
@@ -1617,9 +1618,10 @@ def _join_values(out: DataFrame, vars_: list[str], rows: list[tuple],
             pieces.extend([out] * len(mrows))
             continue
         cols = [vars_[i] for i in mask]
-        vdf = spark.createDataFrame(
+        vdf = local_df(
+            spark,
             [tuple(r[i] for i in mask) for r in mrows],
-            schema=T.StructType(
+            T.StructType(
                 [T.StructField(c, T.StringType()) for c in cols]
             ),
         )
@@ -1964,8 +1966,9 @@ def sparql_query(triples: DataFrame, query: str,
             # DESCRIBE <r1> <r2> ... — the union description, via one
             # semi-join against the inline resource set (no per-resource
             # loop)
-            rdf = triples.sparkSession.createDataFrame(
-                [(_term(t),) for t in toks[1:]], "r string"
+            rdf = local_df(
+                triples.sparkSession, [(_term(t),) for t in toks[1:]],
+                "r string",
             )
             return describe_bound(triples, rdf)
         # DESCRIBE ?v WHERE { ... } — the variable's WHERE-restricted
@@ -2425,9 +2428,10 @@ def sparql_update(table, update: str) -> dict:
                 (s, pr, o, g, g if g is not None else "urn:sparql:update")
                 for s, pr, o, g in quads
             ]
-            df = table.spark.createDataFrame(
-                rows, "subj string, pred string, obj string, prov string,"
-                      " url string"
+            df = local_df(
+                table.spark, rows,
+                "subj string, pred string, obj string, prov string,"
+                " url string",
             )
             info = _append_aligned(table, df, "sparql_insert_data")
             return {"op": "insert_data", "n_rows": info.n_rows,

@@ -3,6 +3,13 @@
 All jobs (tests, bench, CLI) go through :func:`get_spark` so that the
 configuration that matters at 100 TB — AQE, skew-join handling, Arrow
 batching for pandas UDFs, shuffle-partition sizing — is applied uniformly.
+
+Tables the driver builds from Python rows (constant dims, driver-side
+graph results, query seeds) go through :func:`local_df`. It ships the
+rows to the JVM as one Arrow table, which plans as a ``LocalTableScan``.
+``spark.createDataFrame(<list>)`` would instead plan a ``Scan
+ExistingRDD`` over a ``PythonRDD`` and start Python workers every time
+the table is scanned, although no UDF runs.
 """
 
 from __future__ import annotations
@@ -18,7 +25,8 @@ for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS",
            "VECLIB_MAXIMUM_THREADS", "NUMEXPR_NUM_THREADS"):
     os.environ.setdefault(_v, "1")
 
-from pyspark.sql import SparkSession  # noqa: E402
+from pyspark.sql import DataFrame, SparkSession  # noqa: E402
+from pyspark.sql.types import DataType, StructType  # noqa: E402
 
 # Tuned for the sandbox (local[N], 128 GiB); on a real cluster the same keys
 # apply, only sizes change (shuffle.partitions ≈ 2-3× total cores, bounded by
@@ -86,3 +94,35 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_df(
+    spark: SparkSession, rows, schema: str | StructType
+) -> DataFrame:
+    """Driver-side rows → a DataFrame that plans as a ``LocalTableScan``.
+
+    ``rows`` is an iterable of tuples in ``schema`` order; ``schema`` is a
+    DDL string (``"id string, n bigint"``) or a ``StructType``. The rows
+    become one ``pyarrow.Table`` of exactly that schema, so no type is
+    inferred and a value of the wrong type raises here. There is no
+    fallback to the list path: that path is the Python-worker scan this
+    helper exists to avoid.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else DataType.fromDDL(
+        schema
+    )
+    rows = [tuple(r) for r in rows]
+    width = len(struct.fields)
+    bad = next((r for r in rows if len(r) != width), None)
+    if bad is not None:
+        raise ValueError(f"local_df row {bad!r} does not have {width} fields")
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)

@@ -33,6 +33,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from search_spark.session import local_df
+
 
 @contextlib.contextmanager
 def _state_partitions(spark: SparkSession, n: int | None):
@@ -155,6 +157,6 @@ def windowed_event_counts_to_files(
     try:
         return spark.read.parquet(out_dir)
     except Exception:  # no window closed → sink dir has no parquet yet
-        return spark.createDataFrame(
-            [], "w_start timestamp, event_type string, n long"
+        return local_df(
+            spark, [], "w_start timestamp, event_type string, n long"
         )

@@ -21,6 +21,7 @@ from search_spark.operators.relations import relation_stage
 from search_spark.operators.search import semantic_topk
 from search_spark.operators.segment import segment_stage
 from search_spark.operators.triples import SPECS, specs_stage
+from search_spark.session import local_df
 
 
 def mine_texts(
@@ -41,8 +42,10 @@ def mine_texts(
         (f"text://{i}", f"text://{i}", 0, "", t)
         for i, t in enumerate(texts)
     ]
-    paragraphs = spark.createDataFrame(
-        rows, ["url", "uid", "ppos", "section", "text"]
+    paragraphs = local_df(
+        spark,
+        rows,
+        "url string, uid string, ppos bigint, section string, text string",
     )
     sentences = segment_stage(paragraphs)
     mentions = ner_stage(sentences, patterns)

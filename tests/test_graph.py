@@ -835,6 +835,52 @@ def test_landmark_closeness_matches_python(spark):
     assert got == expected
 
 
+@pytest.mark.parametrize("max_hops", [0, -1, 16])
+def test_bfs_family_rejects_max_hops_out_of_range(spark, max_hops):
+    from search_spark.operators.graph import (
+        bfs_distances,
+        landmark_closeness,
+        multi_source_bfs,
+    )
+
+    edges = _edges_df(spark, EDGE_SET)
+    seeds = spark.createDataFrame([("a",)], ["entity"])
+    with pytest.raises(ValueError, match="max_hops"):
+        bfs_distances(edges, seeds, max_hops=max_hops)
+    with pytest.raises(ValueError, match="max_hops"):
+        multi_source_bfs(edges, seeds, max_hops=max_hops)
+    with pytest.raises(ValueError, match="max_hops"):
+        landmark_closeness(edges, max_hops=max_hops)
+
+
+@pytest.mark.parametrize("max_hops", [1, 15])
+def test_landmark_closeness_exact_at_max_hops_bounds(spark, max_hops):
+    """Both ends of the accepted range keep the integer-unit sum exact:
+    lcm(1..15) = 360360 still divides evenly by every distance."""
+    from collections import Counter
+
+    from search_spark.operators.graph import landmark_closeness
+
+    unit = math.lcm(*range(1, max_hops + 1))
+    got = {
+        r["entity"]: (r["n_reached"], r["harmonic"])
+        for r in landmark_closeness(
+            _edges_df(spark, EDGE_SET), n_landmarks=3, max_hops=max_hops
+        ).collect()
+    }
+    dedup = sorted(set(EDGE_SET))
+    od = Counter(u for u, _ in dedup)
+    acc = {}
+    for s in sorted(od, key=lambda e: (-od[e], e))[:3]:
+        for v, d in _py_bfs(dedup, s, max_hops).items():
+            if d > 0:
+                n, units = acc.get(v, (0, 0))
+                acc[v] = (n + 1, units + unit // d)
+    assert got == {
+        v: (n, round(units / float(unit), 6)) for v, (n, units) in acc.items()
+    }
+
+
 def test_hop_plot_counts_match_python(spark):
     from collections import Counter
 

@@ -313,7 +313,7 @@ def main() -> int:
     args = ap.parse_args()
 
     from search_spark import surfaces
-    from search_spark.session import get_spark
+    from search_spark.session import get_spark, local_df
 
     spark = get_spark(f"cli-{args.cmd}")
     spark.sparkContext.setLogLevel("ERROR")
@@ -365,9 +365,7 @@ def main() -> int:
         if args.crawled:
             crawled = spark.read.parquet(args.crawled)
         else:
-            crawled = spark.createDataFrame(
-                [], schema="url string, warc_ts timestamp"
-            )
+            crawled = local_df(spark, [], "url string, warc_ts timestamp")
         frontier = sitemap_frontier(sitemaps, crawled)
         if args.robots:
             robots = spark.read.parquet(args.robots)
@@ -832,8 +830,8 @@ def main() -> int:
             print(f"{rank},{lhs},{rhs},{cnt}")
         if args.segment:
             pairs = [(l, r) for _, l, r, _ in merges]
-            toks = spark.createDataFrame(
-                [(t,) for t in args.segment], ["text"]
+            toks = local_df(
+                spark, [(t,) for t in args.segment], "text string"
             ).select(
                 "text",
                 F.flatten(
