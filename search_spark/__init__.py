@@ -16,3 +16,7 @@ Design principles (see SURVEY.md §7):
 """
 
 __version__ = "0.1.0"
+
+from search_spark import zipimport_gate
+
+zipimport_gate.install()

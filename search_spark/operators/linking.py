@@ -10,9 +10,10 @@ Design (scale-first):
 
 1. **Dedup before scoring.** Mentions repeat enormously at corpus scale
    (head entities by construction); we link *distinct surface forms*
-   (``dropDuplicates`` on the lowercased form), then broadcast the tiny
-   resolved mapping back onto the mention stream. At 10^12 docs the distinct
-   surface-form set is many orders of magnitude smaller than the mention set.
+   (``groupBy`` on the lowercased form, keeping each form's mention count),
+   then broadcast the tiny resolved mapping back onto the mention stream. At
+   10^12 docs the distinct surface-form set is many orders of magnitude
+   smaller than the mention set.
 2. **Exact alias match first** (broadcast join on the exploded alias table) —
    free and precise.
 3. **kNN fallback** for unmatched forms: embed the surface form (the sandbox
@@ -130,21 +131,27 @@ def link_stage(
     concepts: DataFrame,
     dim: int = DEFAULT_DIM,
     min_score: float = 0.35,
+    metrics_out: dict | None = None,
 ) -> DataFrame:
     """Attach ``(concept_id, link_score)`` to every mention.
 
     Returns the mentions DataFrame with ``concept_id`` (nullable) and
-    ``link_score`` columns.
+    ``link_score`` columns. When ``metrics_out`` is given, its
+    ``link_score_histogram`` key receives the per-mention counts of
+    non-null link scores in 0.1-wide buckets, computed by the same job
+    that materializes the resolved forms.
     """
     # Distinct surface forms are consumed three times (exact match, anti-join,
     # kNN) — persist so the mention stream (and everything upstream of it) is
     # scanned exactly once. The form set is tiny relative to mentions by
-    # construction (dedup-before-scoring is the point of this design).
+    # construction (dedup-before-scoring is the point of this design). Each
+    # form carries its mention count ``n`` (same shuffle as a dedup) so the
+    # per-mention score histogram never re-reads the mention stream.
     from search_spark.caching import register
 
     forms = register(
-        mentions.select(F.lower(F.col("mention")).alias("form"))
-        .dropDuplicates(["form"])
+        mentions.groupBy(F.lower(F.col("mention")).alias("form"))
+        .agg(F.count(F.lit(1)).alias("n"))
         .persist()
     )
 
@@ -154,7 +161,7 @@ def link_stage(
     ).select("concept_id", F.lower(F.col("alias")).alias("form"))
     exact = (
         forms.join(F.broadcast(aliases), on="form", how="inner")
-        .groupBy("form")
+        .groupBy("form", "n")
         .agg(F.min("concept_id").alias("concept_id"))  # deterministic on dup aliases
         .withColumn("link_score", F.lit(1.0))
     )
@@ -169,10 +176,11 @@ def link_stage(
         "score", cosine_col("q_emb", "c_emb")
     )
     knn = (
-        scored.groupBy("form")
+        scored.groupBy("form", "n")
         .agg(F.max(F.struct("score", "c_id")).alias("best"))
         .select(
             "form",
+            "n",
             F.when(F.col("best.score") >= min_score, F.col("best.c_id"))
             .alias("concept_id"),
             F.col("best.score").alias("link_score"),
@@ -192,9 +200,24 @@ def link_stage(
     from search_spark.joins import maybe_broadcast
 
     resolved = register(exact.unionByName(knn).persist())
-    n_resolved = resolved.count()
+    # the materializing barrier: one grouped collect by score bucket gives
+    # both the resolved count and the per-mention score histogram
+    buckets = (
+        resolved.groupBy(
+            F.floor(F.col("link_score") * 10).cast("int").alias("b")
+        )
+        .agg(F.count(F.lit(1)).alias("forms"), F.sum("n").alias("mentions"))
+        .collect()
+    )
+    n_resolved = sum(r["forms"] for r in buckets)
+    if metrics_out is not None:
+        scored = [r for r in buckets if r["b"] is not None]
+        metrics_out["link_score_histogram"] = {
+            f"{r['b'] / 10:.1f}": r["mentions"]
+            for r in sorted(scored, key=lambda r: r["b"])
+        }
     return mentions.withColumn(
         "form", F.lower(F.col("mention"))
     ).join(
-        maybe_broadcast(resolved, n_resolved), on="form", how="left"
+        maybe_broadcast(resolved.drop("n"), n_resolved), on="form", how="left"
     ).drop("form")

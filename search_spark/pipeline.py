@@ -20,7 +20,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from search_spark import datagen
+from search_spark import checkpoints, datagen
 from search_spark.caching import register, release_intermediates
 from search_spark.extraction.extract import extract_stage
 from search_spark.io.snapshots import SnapshotTable
@@ -185,23 +185,11 @@ def build_triples(
 
     if cfg.link:
         concepts = datagen.concepts_df(spark, cfg.embedding_dim)
-        linked = link_stage(mentions, concepts, dim=cfg.embedding_dim)
-        if metrics_out is not None:
-            # link-score histogram (north-rule per-run metric): bucketed
-            # counts of per-mention link scores, one cheap job over the
-            # cached mentions + broadcast resolved-forms map
-            rows = (
-                linked.filter(F.col("link_score").isNotNull())
-                .groupBy(
-                    F.floor(F.col("link_score") * 10).cast("int").alias("b")
-                )
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            metrics_out["link_score_histogram"] = {
-                f"{r['b'] / 10:.1f}": r["n"]
-                for r in sorted(rows, key=lambda r: r["b"])
-            }
+        # link_stage's own barrier fills the link-score histogram (the
+        # north-rule per-run metric) when a metrics dict is passed
+        linked = link_stage(
+            mentions, concepts, dim=cfg.embedding_dim, metrics_out=metrics_out
+        )
         if cfg.canonicalize:
             # consumed twice (subj/obj side) — materialized once so the two
             # join exchanges don't race on the uncached CC output
@@ -315,6 +303,10 @@ def run_to_snapshot(
     todo = web_pages
     if done is not None:
         todo = web_pages.join(done, on="url", how="left_anti")
+    # the batch is read three times (this count, the mentions barrier and
+    # the processed/ write): a lazy checkpoint that the count materializes
+    # runs the page scan and the resume anti-join once
+    todo = todo.transform(checkpoints.chain(eager=False))
 
     n_docs = todo.count()
     if n_docs == 0:

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from reference_oracle import (
     load_reference_attribute_module,
     load_reference_eval_module,
+    requires_reference,
 )
 from search_spark.operators.attributes import measurement_type_vote
 from search_spark.operators.evaluation import (
@@ -27,6 +28,7 @@ TAGS = ["class_ann1", "class_ann2", "class_ann3"]
 
 # -- remove_punctuation (golden + randomized parity) ----------------------
 
+@requires_reference
 def test_remove_punctuation_matches_golden_fixture(spark):
     before = pd.read_csv(GOLDEN_BEFORE).reset_index(names="tok_id")
     df = spark.createDataFrame(before)
@@ -40,6 +42,7 @@ def test_remove_punctuation_matches_golden_fixture(spark):
     pd.testing.assert_frame_equal(out, expected)
 
 
+@requires_reference
 def test_remove_punctuation_matches_reference_on_random_streams(spark):
     ev = load_reference_eval_module()
     rng = random.Random(7)
@@ -70,6 +73,7 @@ def test_remove_punctuation_matches_reference_on_random_streams(spark):
 
 # -- unique_etypes / token-mode counts ------------------------------------
 
+@requires_reference
 @pytest.mark.parametrize("mode", ["entity", "token"])
 @pytest.mark.parametrize("col", TAGS)
 def test_iob_type_counts_parity(spark, mode, col):
@@ -92,6 +96,7 @@ def test_iob_type_counts_bad_mode_raises(spark):
 
 # -- measurement-type vote ------------------------------------------------
 
+@requires_reference
 def test_measurement_vote_matches_reference(spark):
     at = load_reference_attribute_module()
     ex = at.AttributeExtractor.__new__(at.AttributeExtractor)
@@ -134,6 +139,7 @@ def _rule_fixture_rows():
     ]
 
 
+@requires_reference
 def test_topic_rules_match_reference(spark):
     import sys
     import types
@@ -191,6 +197,7 @@ def test_topic_rules_match_reference(spark):
     assert any(got.values()) and not all(got.values())
 
 
+@requires_reference
 def test_spans_from_iob_matches_reference_iob2idx(spark):
     """Exact iob2idx parity (eval.py:312-341) on the reference's
     ner_iob_sample.csv fixture and on randomized valid IOB streams."""
@@ -239,6 +246,7 @@ def test_spans_from_iob_matches_reference_iob2idx(spark):
     check(["B-VEG", "B-VEG", "I-VEG", "O"])
 
 
+@requires_reference
 def test_spans_to_text_matches_reference_idx2text(spark):
     ev = load_reference_eval_module()
     from search_spark.operators.evaluation import spans_from_iob, spans_to_text

@@ -18,7 +18,10 @@ from search_spark.extraction.html_text import (
     extract_paragraphs,
     render_element,
 )
-from tests.reference_oracle import reference_element_to_str
+from tests.reference_oracle import (
+    reference_element_to_str,
+    requires_reference,
+)
 
 from xml.etree import ElementTree
 
@@ -43,6 +46,7 @@ HAND_CASES = [
 ]
 
 
+@requires_reference
 @pytest.mark.parametrize("fragment", HAND_CASES)
 def test_kernel_matches_reference_hand_cases(fragment):
     assert render_jats(fragment) == reference_element_to_str(fragment)
@@ -82,6 +86,7 @@ _fragment = st.recursive(
 ).map(lambda body: f"<p>{body}</p>")
 
 
+@requires_reference
 @settings(max_examples=300, deadline=None)
 @given(_fragment)
 def test_kernel_matches_reference_random_trees(fragment):

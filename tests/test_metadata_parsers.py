@@ -19,7 +19,7 @@ from search_spark.extraction.metadata import (
 )
 from search_spark.extraction.parsers import parse_pubmed_xml, parse_tei_xml
 
-from reference_oracle import load_reference_article_module
+from reference_oracle import load_reference_article_module, requires_reference
 
 REF_DATA = "/root/reference/tests/data"
 PUBMED_FIXTURES = [
@@ -36,6 +36,7 @@ def ref():
 
 # -- PubMed ---------------------------------------------------------------
 
+@requires_reference
 @pytest.mark.parametrize("path", PUBMED_FIXTURES)
 def test_pubmed_abstract_parity(ref, path):
     raw = open(path, "rb").read()
@@ -50,6 +51,7 @@ def test_pubmed_abstract_parity(ref, path):
     assert all(sec == "Abstract" for sec, _ in ours) or not ours
 
 
+@requires_reference
 @pytest.mark.parametrize("path", PUBMED_FIXTURES)
 def test_pubmed_metadata_parity(ref, path):
     root = ET.parse(path).getroot()
@@ -65,6 +67,7 @@ def test_pubmed_metadata_parity(ref, path):
     assert meta["doi"] == ref_parser.doi
 
 
+@requires_reference
 def test_pubmed_article_set_iterates_all_members(ref):
     # reference set iteration (entrypoint/database/parse.py:143-147) creates
     # one parser per <PubmedArticle>; our parser processes the whole set
@@ -98,6 +101,7 @@ def test_pubmed_article_set_iterates_all_members(ref):
 
 # -- TEI ------------------------------------------------------------------
 
+@requires_reference
 def test_tei_paragraphs_parity(ref):
     ref_parser = ref.TEIXMLParser(TEI_FIXTURE)
     expected = list(ref_parser.paragraphs)
@@ -107,6 +111,7 @@ def test_tei_paragraphs_parity(ref):
     assert len(expected) > 5
 
 
+@requires_reference
 def test_tei_formula_reassembly_parity(ref, tmp_path):
     # sentence reassembly across <p>/<formula> runs (_build_texts,
     # article.py:998-1058): formulas join as FORMULA, lowercase-starting
@@ -132,6 +137,7 @@ def test_tei_formula_reassembly_parity(ref, tmp_path):
     assert ("Figure Caption", "Fig caption.") in ours
 
 
+@requires_reference
 def test_tei_abstract_parity(ref):
     ref_parser = ref.TEIXMLParser(TEI_FIXTURE)
     expected = list(ref_parser.abstract)
@@ -140,6 +146,7 @@ def test_tei_abstract_parity(ref):
     assert ours == expected
 
 
+@requires_reference
 def test_tei_metadata_parity(ref):
     ref_parser = ref.TEIXMLParser(TEI_FIXTURE, is_arxiv=True)
     meta = tei_metadata(open(TEI_FIXTURE, "rb").read(), path=TEI_FIXTURE)
@@ -151,6 +158,7 @@ def test_tei_metadata_parity(ref):
 
 # -- identifiers / uid ----------------------------------------------------
 
+@requires_reference
 @pytest.mark.parametrize(
     "ids",
     [
@@ -185,6 +193,7 @@ def test_article_uid_prefers_identifiers_then_url():
     assert article_uid(no_id) == content_uid("t", [], [], [])
 
 
+@requires_reference
 @pytest.mark.parametrize(
     "path",
     [
@@ -200,6 +209,7 @@ def test_arxiv_id_from_path_parity(ref, path):
     )
 
 
+@requires_reference
 def test_arxiv_id_invalid_path_raises(ref):
     for fn in (arxiv_id_from_path, ref.get_arxiv_id):
         with pytest.raises(ValueError):
@@ -256,6 +266,7 @@ def test_articles_stage_mixed_formats(spark):
     assert html["uid"] == hashlib.md5(b"https://example.org/mf/0").hexdigest()
 
 
+@requires_reference
 @pytest.mark.parametrize(
     "path",
     [f"{REF_DATA}/jats_article.xml", f"{REF_DATA}/biorxiv.xml"],
@@ -273,6 +284,7 @@ def test_jats_metadata_parity(ref, path):
     assert meta["doi"] == ref_parser.doi
 
 
+@requires_reference
 def test_jats_meca_zip_parity(ref, tmp_path):
     """A .meca zip (content/*.xml) parses identically to the inner JATS
     file — parity vs the reference's from_zip on a synthesized archive
@@ -312,6 +324,7 @@ def test_jats_meca_zip_parity(ref, tmp_path):
         parse_jats_meca(bad.getvalue())
 
 
+@requires_reference
 @pytest.mark.parametrize(
     "path",
     [f"{REF_DATA}/jats_article.xml", f"{REF_DATA}/biorxiv.xml"],
@@ -342,6 +355,7 @@ def _cord19_sample_files():
     )
 
 
+@requires_reference
 def test_cord19_parity_on_reference_samples(ref):
     """parse_cord19_json + cord19_metadata vs the reference's
     CORD19ArticleParser on its real CORD-19 sample documents."""

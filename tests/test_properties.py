@@ -16,7 +16,10 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from reference_oracle import load_reference_eval_module  # noqa: F401  (stubs)
+from reference_oracle import (  # noqa: F401  (stubs)
+    load_reference_eval_module,
+    requires_reference,
+)
 from search_spark.operators.ner import GazetteerMatcher
 
 # -- GazetteerMatcher: leftmost-longest non-overlapping vs brute force ----
@@ -69,6 +72,7 @@ def test_gazetteer_matcher_matches_brute_force(parts):
 
 # -- TEI sentence reassembly vs the reference ------------------------------
 
+@requires_reference
 @settings(max_examples=60, deadline=None)
 @given(
     st.lists(

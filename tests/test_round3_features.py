@@ -14,11 +14,14 @@ from xml.etree import ElementTree
 import pytest
 from pyspark.sql import functions as F
 
+from reference_oracle import requires_reference
+
 REF_DATA = Path("/root/reference/tests/data")
 
 
 # -- PubMed topic extraction ------------------------------------------------
 
+@requires_reference
 def test_pubmed_article_topics_reference_fixture():
     """The reference's own fixture expectation
     (tests/unit/database/test_topic.py::test_get_topics_for_pubmed_article):
@@ -34,6 +37,7 @@ def test_pubmed_article_topics_reference_fixture():
     ]
 
 
+@requires_reference
 def test_pubmed_topics_parity_vs_reference_module():
     """Function-level parity: our mesh parse and topic extraction produce
     identical structures to the reference's on its own fixture."""
@@ -60,6 +64,7 @@ def _meca_bytes(xml_path: Path) -> bytes:
     return buf.getvalue()
 
 
+@requires_reference
 def test_medrxiv_meca_topic_journal():
     # reference expectation (test_topic.py::TestExtractInfoFromZipfile)
     from search_spark.extraction.topics import (
@@ -72,6 +77,7 @@ def test_medrxiv_meca_topic_journal():
     assert (topic, journal) == ("Neuroscience", "bioRxiv")
 
 
+@requires_reference
 def test_medrxiv_meca_error_paths(tmp_path):
     from search_spark.extraction.topics import (
         extract_article_topics_from_medrxiv_meca,
@@ -158,6 +164,7 @@ def test_pubmed_topics_stage_on_error_skip(spark):
 
 # -- Prodigy annotations ----------------------------------------------------
 
+@requires_reference
 def test_annotations2df_parity_vs_reference(tmp_path):
     """Row-for-row parity with the reference loader on the same JSONL."""
     import pandas as pd
@@ -434,6 +441,7 @@ def test_ner_errors_operator(spark):
 
 # -- MeSH tree / ancestor resolution ----------------------------------------
 
+@requires_reference
 def test_mesh_parse_parity_vs_reference():
     """parse_tree_numbers: line-for-line parity with the reference parser
     on the engine's NT fixture AND the reference's own test case."""
@@ -466,6 +474,7 @@ def test_mesh_parse_parity_vs_reference():
     }
 
 
+@requires_reference
 def test_mesh_resolve_parents_parity_vs_reference():
     from reference_oracle import load_reference_mesh_module
 

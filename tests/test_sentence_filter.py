@@ -153,3 +153,40 @@ def test_lineage_carries_link_score_histogram(spark, tmp_path):
     # and the histogram is persisted in the snapshot lineage
     lineage = SnapshotTable(spark, root).lineage()
     assert lineage[0]["extra"]["link_score_histogram"] == hist
+
+
+def test_link_stage_histogram_equals_histogram_of_linked(spark):
+    """The histogram link_stage takes from its resolved-forms barrier (sum
+    of per-form mention counts) equals the per-mention histogram of its
+    output, with kNN-scored forms and repeated mixed-case forms mixed in."""
+    from search_spark.operators.linking import link_stage
+    from search_spark.operators.ner import ner_stage
+
+    pages = datagen.generate_web_pages(spark, 12, seed=9, partitions=2)
+    mentions = ner_stage(
+        segment_stage(extract_stage(pages)), datagen.GAZETTEER_FLAT
+    )
+    extra = spark.createDataFrame(
+        [
+            ("u9", "id9", 0, 0, "S", 0, 5, form, "CHEMICAL")
+            for form in ["zzz-unknown", "ZZZ-Unknown", "zzz-unknown",
+                         "Glucoze", "dextrose", "Dextrose", "qq"]
+        ],
+        mentions.schema,
+    )
+    mentions = mentions.unionByName(extra).persist()
+    metrics: dict = {}
+    linked = link_stage(mentions, datagen.concepts_df(spark), metrics_out=metrics)
+    rows = (
+        linked.filter(F.col("link_score").isNotNull())
+        .groupBy(F.floor(F.col("link_score") * 10).cast("int").alias("b"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    expected = {
+        f"{r['b'] / 10:.1f}": r["n"] for r in sorted(rows, key=lambda r: r["b"])
+    }
+    mentions.unpersist()
+    assert metrics["link_score_histogram"] == expected
+    assert len(expected) > 1
+    assert sum(expected.values()) == linked.count()
