@@ -21,6 +21,24 @@ Semantics preserved from the reference and required by the north rule:
     "checkpoint-resumable per Iceberg snapshot with per-partition lineage
     rows and metrics").
 
+Layout contract:
+
+  * **one file per populated bucket per commit.** Every bucketed write
+    (``append``, the copy-on-write rewrites behind ``delete_where`` /
+    ``delete_matching``, ``squash_snapshots`` and ``compact``) goes through
+    :meth:`SnapshotTable._write_bucketed`, which rebalances rows by
+    ``bucket`` before the partitioned write. AQE coalesces a small commit
+    so each bucket lands whole in one writer task, and splits a bucket
+    larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` across
+    several writers, so a big batch keeps parallel writers and a hot
+    bucket does not become one straggler task.
+  * **readers take the schema from lineage.** Each commit records its data
+    schema in the lineage JSON; ``load()`` hands the union of the selected
+    snapshots' schemas to the reader, so no read launches a footer
+    schema-inference job. Snapshots that predate schema recording (or two
+    snapshots that give one column different types) fall back to footer
+    inference, with ``mergeSchema`` when the snapshots may disagree.
+
 Swapping this module for real Iceberg changes only the write/commit calls —
 the pipeline sees the same ``load / processed_urls / append`` interface.
 """
@@ -31,9 +49,9 @@ import json
 import os
 import shutil
 import time
-from dataclasses import asdict, dataclass
+from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 
 #: partition/layout columns excluded from the lineage-recorded schema
@@ -50,6 +68,76 @@ def _data_schema(df: DataFrame) -> list[list[str]]:
         if f.name not in _LAYOUT_COLS
     ]
 
+
+def _ddl(schema: list[list[str]], layout: tuple[str, ...]) -> str:
+    """DDL for a recorded data schema plus ``int`` layout columns — the
+    types partition discovery infers for ``snapshot=<k>/bucket=<b>``."""
+    cols = [*schema, *([c, "int"] for c in layout)]
+    return ", ".join(
+        "`{}` {}".format(name.replace("`", "``"), typ) for name, typ in cols
+    )
+
+
+def _partitions(per_bucket: list) -> list[dict]:
+    """Lineage ``partitions`` rows: the per-bucket counts only."""
+    return [
+        {k: r[k] for k in ("bucket", "n_rows", "n_urls")} for r in per_bucket
+    ]
+
+
+def _zordered(lineage: dict, zorder: list[str]) -> bool:
+    """True when the snapshot's files are still Z-ordered by ``zorder``:
+    its latest compaction recorded those columns and no delete rewrote
+    it since."""
+    compactions = lineage.get("compactions") or [{}]
+    last = compactions[-1]
+    if last.get("zorder_by") != zorder:
+        return False
+    deletes = lineage.get("deletes") or []
+    return not any(d["at"] > last["at"] for d in deletes)
+
+
+def _zorder_key(df: DataFrame, zorder: list[str]) -> Column:
+    """The Morton key over ``zorder``: numeric columns min/max-scaled into
+    the curve's 16-bit domain (one stats job), strings hashed to 16 bits."""
+    from pyspark.sql.types import NumericType
+
+    from search_spark.operators.layout import zorder_key
+
+    fields = {f.name: f.dataType for f in df.schema.fields}
+    num_cols = [c for c in zorder if isinstance(fields[c], NumericType)]
+    stats = (
+        df.agg(
+            *[
+                agg
+                for c in num_cols
+                for agg in (
+                    F.min(c).alias(f"__mn_{c}"),
+                    F.max(c).alias(f"__mx_{c}"),
+                )
+            ]
+        ).first()
+        if num_cols
+        else {}
+    )
+    dims = []
+    for c in zorder:
+        if c in num_cols:
+            # min/max-scale into the 16-bit curve domain so per-file stats
+            # bound the REAL values (range skipping); a hash would scatter
+            # them
+            mn = float(stats[f"__mn_{c}"])
+            span = (float(stats[f"__mx_{c}"]) - mn) or 1.0
+            dims.append(
+                F.floor(
+                    (F.col(c) - F.lit(mn)) * F.lit(65535.0 / span)
+                ).cast("bigint")
+            )
+        else:
+            dims.append(F.xxhash64(F.col(c)).bitwiseAND(F.lit(0xFFFF)))
+    return zorder_key(dims)
+
+
 N_BUCKETS_DEFAULT = 64
 
 
@@ -61,6 +149,8 @@ class SnapshotInfo:
     n_urls: int
     wall_seconds: float
     extra: dict
+    #: totals of ``append(count_where=...)``; not written to lineage
+    counts: dict = field(default_factory=dict)
 
 
 class SnapshotTable:
@@ -101,15 +191,52 @@ class SnapshotTable:
         ]
         if not paths:
             return None
-        reader = self.spark.read.option("basePath", f"{self.root}/data")
+        return (
+            self._reader(snaps, ("snapshot", "bucket"))
+            .option("basePath", f"{self.root}/data")
+            .parquet(*paths)
+        )
+
+    def _reader(
+        self, snaps: list[int], layout: tuple[str, ...]
+    ) -> DataFrameReader:
+        """A parquet reader for the data of ``snaps``, whose files carry
+        the ``layout`` partition columns. Iceberg schema-evolution
+        analogue: with every schema recorded at commit, the reader gets
+        their union and runs no footer job; a column added later reads
+        NULL in older snapshots. Otherwise it infers from footers, with
+        ``mergeSchema`` only when the snapshots may disagree."""
+        schema = self._recorded_schema(snaps)
+        if schema is not None:
+            return self.spark.read.schema(_ddl(schema, layout))
         if self._needs_schema_merge(snaps):
-            # Iceberg schema-evolution analogue, metadata-gated: lineage
-            # records each snapshot's schema at commit time, so the
-            # common single-schema table never pays the all-footers
-            # mergeSchema scan — only a table whose snapshots actually
-            # disagree (or predate schema recording) does.
-            reader = reader.option("mergeSchema", "true")
-        return reader.parquet(*paths)
+            return self.spark.read.option("mergeSchema", "true")
+        return self.spark.read
+
+    def _lineage_json(self, k: int) -> dict | None:
+        try:
+            with open(f"{self.root}/_lineage/snapshot={k}.json") as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return None
+
+    def _recorded_schema(self, snaps: list[int]) -> list[list[str]] | None:
+        """Union of the lineage-recorded data schemas of ``snaps``, oldest
+        first — the column order footer inference gives. ``None`` when a
+        snapshot predates schema recording or two snapshots record one
+        column with different types. Tombstones hold no data and are
+        skipped."""
+        cols: dict[str, str] = {}
+        for k in snaps:
+            j = self._lineage_json(k)
+            if j is not None and j.get("tombstone"):
+                continue
+            if j is None or j.get("schema") is None:
+                return None
+            for name, typ in j["schema"]:
+                if cols.setdefault(name, typ) != typ:
+                    return None
+        return [[name, typ] for name, typ in cols.items()]
 
     def _needs_schema_merge(self, snaps: list[int]) -> bool:
         """True when the selected snapshots' lineage-recorded schemas
@@ -118,10 +245,8 @@ class SnapshotTable:
             return False
         schemas = []
         for k in snaps:
-            try:
-                with open(f"{self.root}/_lineage/snapshot={k}.json") as f:
-                    j = json.load(f)
-            except FileNotFoundError:
+            j = self._lineage_json(k)
+            if j is None:
                 schemas.append(None)
                 continue
             if j.get("tombstone"):
@@ -143,7 +268,9 @@ class SnapshotTable:
         *input* batch, not the output) so that documents which legitimately
         produced zero triples are still marked done and never reprocessed.
         """
-        snaps = self.snapshots()
+        return self._processed_urls(self.snapshots())
+
+    def _processed_urls(self, snaps: list[int]) -> DataFrame | None:
         paths = [
             p
             for k in snaps
@@ -151,8 +278,10 @@ class SnapshotTable:
         ]
         if not paths:
             return None
+        # the sidecar's schema is fixed, so no footer job infers it
         return (
-            self.spark.read.option("basePath", f"{self.root}/processed")
+            self.spark.read.schema("url string, snapshot int")
+            .option("basePath", f"{self.root}/processed")
             .parquet(*paths)
             .select("url")
             .distinct()
@@ -192,11 +321,7 @@ class SnapshotTable:
         return df
 
     def lineage(self) -> list[dict]:
-        out = []
-        for k in self.snapshots():
-            with open(f"{self.root}/_lineage/snapshot={k}.json") as f:
-                out.append(json.load(f))
-        return out
+        return [self._lineage_json(k) for k in self.snapshots()]
 
     # -- write -----------------------------------------------------------
     def append(
@@ -204,12 +329,17 @@ class SnapshotTable:
         df: DataFrame,
         extra_metrics: dict | None = None,
         processed_keys: DataFrame | None = None,
+        count_where: dict[str, Column] | None = None,
     ) -> SnapshotInfo:
         """Write one snapshot: url-hash-bucketed parquet + lineage JSON.
 
         The bucket column is ``pmod(xxhash64(url), n_buckets)`` — the
         Iceberg ``bucket(N, url)`` analogue; it both balances writers and
         gives downstream readers a co-location key.
+
+        ``count_where`` maps names to boolean conditions; the read-back
+        that yields the lineage counts also counts the written rows
+        matching each, into ``SnapshotInfo.counts`` (never into lineage).
         """
         snapshot_id = (self.snapshots() or [0])[-1] + 1
         t0 = time.time()
@@ -227,45 +357,80 @@ class SnapshotTable:
         for debris in (path, f"{self.root}/processed/snapshot={snapshot_id}"):
             if os.path.isdir(debris):
                 shutil.rmtree(debris)
-        bucketed.write.partitionBy("bucket").mode("errorifexists").parquet(path)
+        self._write_bucketed(bucketed, path, "errorifexists")
         if processed_keys is not None:
             processed_keys.select("url").distinct().write.mode(
                 "errorifexists"
             ).parquet(f"{self.root}/processed/snapshot={snapshot_id}")
         wall = time.time() - t0
 
-        written = self.spark.read.parquet(path)
-        per_bucket = (
+        schema = _data_schema(df)
+        counts = count_where or {}
+        per_bucket = self._bucket_stats(
+            self.spark.read.schema(_ddl(schema, ("bucket",))).parquet(path),
+            *(F.count_if(cond).alias(name) for name, cond in counts.items()),
+        )
+        info = SnapshotInfo(
+            snapshot_id=snapshot_id,
+            table=self.root,
+            n_rows=sum(r["n_rows"] for r in per_bucket),
+            n_urls=sum(r["n_urls"] for r in per_bucket),
+            wall_seconds=wall,
+            extra=extra_metrics or {},
+            counts={n: sum(r[n] for r in per_bucket) for n in counts},
+        )
+        lineage = {
+            **asdict(info),
+            "partitions": _partitions(per_bucket),
+            # commit-time schema (Iceberg metadata analogue) — readers
+            # take it instead of inferring one from parquet footers
+            "schema": schema,
+        }
+        del lineage["counts"]
+        # atomic rename = the commit point (Iceberg metadata-swap analogue)
+        self._commit_lineage(snapshot_id, lineage)
+        return info
+
+    def _write_bucketed(
+        self,
+        df: DataFrame,
+        path: str,
+        mode: str,
+        sort_by: list[Column] | None = None,
+    ) -> None:
+        """The one bucketed writer behind every snapshot directory.
+
+        The rebalance hint shuffles rows by ``bucket``: AQE coalesces a
+        small commit so each populated bucket is one file, and splits a
+        bucket larger than the advisory partition size across writers.
+        ``sort_by`` orders rows within each file after that shuffle,
+        behind ``bucket`` (the partitioned writer needs ``bucket`` first
+        and would otherwise add its own bucket-only sort)."""
+        out = df.hint("rebalance", "bucket")
+        if sort_by:
+            out = out.sortWithinPartitions(F.col("bucket"), *sort_by)
+        out.write.partitionBy("bucket").mode(mode).parquet(path)
+
+    @staticmethod
+    def _bucket_stats(written: DataFrame, *aggs: Column) -> list:
+        """One grouped collect over a written snapshot: per-bucket row
+        and url counts (plus ``aggs``) for its lineage."""
+        return (
             written.groupBy("bucket")
             .agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.countDistinct("url").alias("n_urls"),
+                *aggs,
             )
             .collect()
         )
-        n_rows = sum(r["n_rows"] for r in per_bucket)
-        n_urls = sum(r["n_urls"] for r in per_bucket)
-        info = SnapshotInfo(
-            snapshot_id=snapshot_id,
-            table=self.root,
-            n_rows=n_rows,
-            n_urls=n_urls,
-            wall_seconds=wall,
-            extra=extra_metrics or {},
-        )
-        lineage = {
-            **asdict(info),
-            "partitions": [r.asDict() for r in per_bucket],
-            # commit-time schema (Iceberg metadata analogue) — lets load()
-            # gate mergeSchema on actual snapshot disagreement
-            "schema": _data_schema(df),
-        }
-        tmp = f"{self.root}/_lineage/.snapshot={snapshot_id}.json.tmp"
+
+    def _commit_lineage(self, k: int, lineage: dict) -> None:
+        """Write snapshot ``k``'s lineage JSON by atomic rename."""
+        tmp = f"{self.root}/_lineage/.snapshot={k}.json.tmp"
         with open(tmp, "w") as f:
             json.dump(lineage, f, indent=2, default=str)
-        # atomic rename = the commit point (Iceberg metadata-swap analogue)
-        os.rename(tmp, f"{self.root}/_lineage/snapshot={snapshot_id}.json")
-        return info
+        os.rename(tmp, f"{self.root}/_lineage/snapshot={k}.json")
 
     def delete_where(self, condition: Column) -> int:
         """Copy-on-write ``DELETE WHERE`` — the Iceberg
@@ -323,7 +488,8 @@ class SnapshotTable:
             path = f"{self.root}/data/snapshot={k}"
             if not os.path.isdir(path):
                 continue  # already tombstoned by a previous delete
-            df = self.spark.read.parquet(path)
+            reader = self._reader([k], ("bucket",))
+            df = reader.parquet(path)
             n_before = df.count()
             remaining = transform(df)
             n_after = remaining.count()
@@ -344,36 +510,21 @@ class SnapshotTable:
                     shutil.rmtree(tmp)
                 # the write materializes fully from the old files before
                 # the swap below removes them
-                remaining.write.partitionBy("bucket").mode(
-                    "overwrite"
-                ).parquet(tmp)
+                self._write_bucketed(remaining, tmp, "overwrite")
                 shutil.rmtree(path)
                 os.rename(tmp, path)
-                written = self.spark.read.parquet(path)
-                per_bucket = (
-                    written.groupBy("bucket")
-                    .agg(
-                        F.count(F.lit(1)).alias("n_rows"),
-                        F.countDistinct("url").alias("n_urls"),
-                    )
-                    .collect()
-                )
+                per_bucket = self._bucket_stats(reader.parquet(path))
             total += n_before - n_after
 
-            lineage_path = f"{self.root}/_lineage/snapshot={k}.json"
-            with open(lineage_path) as f:
-                lineage = json.load(f)
+            lineage = self._lineage_json(k)
             lineage["n_rows"] = sum(r["n_rows"] for r in per_bucket)
-            lineage["partitions"] = [r.asDict() for r in per_bucket]
+            lineage["partitions"] = _partitions(per_bucket)
             if not per_bucket:
                 lineage["tombstone"] = True
             lineage.setdefault("deletes", []).append(
                 {"n_deleted": n_before - n_after, "at": time.time()}
             )
-            tmp_json = f"{self.root}/_lineage/.snapshot={k}.json.tmp"
-            with open(tmp_json, "w") as f:
-                json.dump(lineage, f, indent=2, default=str)
-            os.rename(tmp_json, lineage_path)
+            self._commit_lineage(k, lineage)
         return total
 
     def squash_snapshots(self, keep_last: int = 5) -> dict:
@@ -414,52 +565,32 @@ class SnapshotTable:
         per_bucket: list = []
         n_rows = n_urls = 0
         if data_paths:
-            reader = self.spark.read.option(
-                "basePath", f"{self.root}/data"
+            df = (
+                self._reader(old, ("snapshot", "bucket"))
+                .option("basePath", f"{self.root}/data")
+                .parquet(*data_paths)
+                .drop("snapshot")
             )
-            if self._needs_schema_merge(old):
-                reader = reader.option("mergeSchema", "true")
-            df = reader.parquet(*data_paths).drop("snapshot")
+            schema = _data_schema(df)
             tmp = f"{self.root}/data/.snapshot={base_id}.squash"
             if os.path.exists(tmp):
                 shutil.rmtree(tmp)
-            # one file per bucket, same as compact()
-            df.repartition("bucket").write.partitionBy("bucket").mode(
-                "overwrite"
-            ).parquet(tmp)
+            self._write_bucketed(df, tmp, "overwrite")
             for k in old:
                 p = f"{self.root}/data/snapshot={k}"
                 if os.path.isdir(p):
                     shutil.rmtree(p)
             os.rename(tmp, f"{self.root}/data/snapshot={base_id}")
-            written = self.spark.read.parquet(
-                f"{self.root}/data/snapshot={base_id}"
-            )
-            per_bucket = (
-                written.groupBy("bucket")
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.countDistinct("url").alias("n_urls"),
+            per_bucket = self._bucket_stats(
+                self.spark.read.schema(_ddl(schema, ("bucket",))).parquet(
+                    f"{self.root}/data/snapshot={base_id}"
                 )
-                .collect()
             )
             n_rows = sum(r["n_rows"] for r in per_bucket)
             n_urls = sum(r["n_urls"] for r in per_bucket)
 
-        proc_paths = [
-            p
-            for k in old
-            if os.path.isdir(p := f"{self.root}/processed/snapshot={k}")
-        ]
-        if proc_paths:
-            merged_urls = (
-                self.spark.read.option(
-                    "basePath", f"{self.root}/processed"
-                )
-                .parquet(*proc_paths)
-                .select("url")
-                .distinct()
-            )
+        merged_urls = self._processed_urls(old)
+        if merged_urls is not None:
             tmp_p = f"{self.root}/processed/.snapshot={base_id}.squash"
             if os.path.exists(tmp_p):
                 shutil.rmtree(tmp_p)
@@ -477,18 +608,15 @@ class SnapshotTable:
             "n_urls": n_urls,
             "wall_seconds": 0.0,
             "extra": {},
-            "partitions": [r.asDict() for r in per_bucket],
+            "partitions": _partitions(per_bucket),
             "squashed_ids": list(old),
             "squashes": [{"at": time.time(), "keep_last": keep_last}],
         }
         if per_bucket:
-            lineage["schema"] = _data_schema(written)
+            lineage["schema"] = schema
         if not per_bucket:
             lineage["tombstone"] = True
-        tmp_json = f"{self.root}/_lineage/.snapshot={base_id}.json.tmp"
-        with open(tmp_json, "w") as f:
-            json.dump(lineage, f, indent=2, default=str)
-        os.rename(tmp_json, f"{self.root}/_lineage/snapshot={base_id}.json")
+        self._commit_lineage(base_id, lineage)
         for k in old[:-1]:
             p = f"{self.root}/_lineage/snapshot={k}.json"
             if os.path.exists(p):
@@ -510,31 +638,41 @@ class SnapshotTable:
         min_files_per_bucket: int = 2,
         zorder_by: list[str] | None = None,
     ) -> dict:
-        """Small-file compaction — the Iceberg ``rewrite_data_files``
-        analogue. Streaming/micro-batch appends leave each snapshot's
-        bucket directories littered with per-task files; at 100-TB scale
-        the file count, not the byte count, is what kills scan planning
-        and NameNode/manifest pressure. Each committed snapshot whose
-        data spans more than ``min_files_per_bucket × n_buckets`` files
-        is rewritten with one file per bucket (``repartition("bucket")``
-        puts every bucket wholly in one task), via the same
-        write-to-sibling-then-swap protocol as :meth:`delete_where` so
-        readers never observe a half-compacted snapshot. Row content,
-        snapshot boundaries, and time travel are all preserved — only
-        the file layout changes; lineage gains a ``compactions`` audit
-        entry. Returns ``{"snapshots_compacted", "files_before",
-        "files_after"}``.
+        """Layout rewrite — the Iceberg ``rewrite_data_files`` analogue.
+        Commits already write one file per populated bucket (see
+        :meth:`_write_bucketed`), so compaction is left with three jobs:
 
-        ``zorder_by`` additionally clusters each rewritten file by the
-        Z-order (Morton) curve over the named columns — the ``OPTIMIZE
-        ZORDER BY`` analogue. Numeric columns are min/max-scaled into
-        the curve's 16-bit domain, so per-file min/max statistics bound
-        them and RANGE predicates skip files. String columns are hashed
-        to 16-bit keys: equal values still cluster into few files
-        (equality workloads benefit), but a hash preserves no string
-        ORDER, so min/max stats on a string column cannot prune ranges
-        — list numerics when range skipping is the goal.
+        * **Z-order** a snapshot (``zorder_by``, below);
+        * **legacy snapshots**, written before the rebalanced writer with
+          one file per writer task per bucket;
+        * **split buckets**: a bucket that outgrew the advisory partition
+          size at commit is written by several tasks; a rewrite merges
+          them once it fits (after a delete, or under a larger advisory
+          size).
+
+        Without ``zorder_by``, each committed snapshot whose data spans
+        more than ``min_files_per_bucket × n_buckets`` files is
+        rewritten. With it, each snapshot whose latest ``compactions``
+        entry does not record the same ``zorder_by`` (or that a delete
+        rewrote since) is rewritten, whatever its file count. Rewrites
+        use the same write-to-sibling-then-swap protocol as
+        :meth:`delete_where` so readers never observe a half-compacted
+        snapshot. Row content, snapshot boundaries, and time travel are
+        all preserved — only the file layout changes; lineage gains a
+        ``compactions`` audit entry. Returns ``{"snapshots_compacted",
+        "files_before", "files_after"}``.
+
+        ``zorder_by`` clusters each rewritten file by the Z-order
+        (Morton) curve over the named columns — the ``OPTIMIZE ZORDER
+        BY`` analogue. Numeric columns are min/max-scaled into the
+        curve's 16-bit domain, so per-file min/max statistics bound them
+        and RANGE predicates skip files. String columns are hashed to
+        16-bit keys: equal values still cluster into few files (equality
+        workloads benefit), but a hash preserves no string ORDER, so
+        min/max stats on a string column cannot prune ranges — list
+        numerics when range skipping is the goal.
         """
+        zorder = list(zorder_by) if zorder_by else None
         snapshots_compacted = 0
         files_before = files_after = 0
         for k in self.snapshots():
@@ -542,93 +680,39 @@ class SnapshotTable:
             if not os.path.isdir(path):
                 continue
             before = self._data_files(path)
-            n_buckets_present = len(
-                [d for d in os.listdir(path) if d.startswith("bucket=")]
-            )
             files_before += len(before)
-            if len(before) <= min_files_per_bucket * n_buckets_present:
+            lineage = self._lineage_json(k)
+            if zorder:
+                stale = bool(before) and not _zordered(lineage, zorder)
+            else:
+                n_buckets_present = len(
+                    [d for d in os.listdir(path) if d.startswith("bucket=")]
+                )
+                stale = len(before) > min_files_per_bucket * n_buckets_present
+            if not stale:
                 files_after += len(before)
                 continue
-            df = self.spark.read.parquet(path)
+            df = self._reader([k], ("bucket",)).parquet(path)
             tmp = f"{self.root}/data/.snapshot={k}.compact"
             if os.path.exists(tmp):
                 shutil.rmtree(tmp)
-            out = df.repartition("bucket")
-            if zorder_by:
-                from pyspark.sql.types import NumericType
-
-                from search_spark.operators.layout import zorder_key
-
-                fields = {f.name: f.dataType for f in df.schema.fields}
-                num_cols = [
-                    c
-                    for c in zorder_by
-                    if isinstance(fields[c], NumericType)
-                ]
-                stats = (
-                    df.agg(
-                        *[
-                            agg
-                            for c in num_cols
-                            for agg in (
-                                F.min(c).alias(f"__mn_{c}"),
-                                F.max(c).alias(f"__mx_{c}"),
-                            )
-                        ]
-                    ).first()
-                    if num_cols
-                    else {}
-                )
-                dims = []
-                for c in zorder_by:
-                    if c in num_cols:
-                        # min/max-scale into the 16-bit curve domain so
-                        # per-file stats bound the REAL values (range
-                        # skipping); a hash would scatter them
-                        mn = float(stats[f"__mn_{c}"])
-                        span = (float(stats[f"__mx_{c}"]) - mn) or 1.0
-                        dims.append(
-                            F.floor(
-                                (F.col(c) - F.lit(mn))
-                                * F.lit(65535.0 / span)
-                            ).cast("bigint")
-                        )
-                    else:
-                        dims.append(
-                            F.xxhash64(F.col(c)).bitwiseAND(F.lit(0xFFFF))
-                        )
-                # lead with the partition column: the partitioned writer
-                # requires rows ordered by it and would otherwise insert
-                # its own bucket-only sort, destroying the Z order
-                out = out.sortWithinPartitions(
-                    F.col("bucket"), zorder_key(dims)
-                )
-            (
-                out.write.partitionBy("bucket")
-                .mode("overwrite")
-                .parquet(tmp)
-            )
+            sort_by = [_zorder_key(df, zorder)] if zorder else None
+            self._write_bucketed(df, tmp, "overwrite", sort_by=sort_by)
             shutil.rmtree(path)
             os.rename(tmp, path)
             after = self._data_files(path)
             files_after += len(after)
             snapshots_compacted += 1
 
-            lineage_path = f"{self.root}/_lineage/snapshot={k}.json"
-            with open(lineage_path) as f:
-                lineage = json.load(f)
             lineage.setdefault("compactions", []).append(
                 {
                     "files_before": len(before),
                     "files_after": len(after),
-                    "zorder_by": list(zorder_by) if zorder_by else None,
+                    "zorder_by": zorder,
                     "at": time.time(),
                 }
             )
-            tmp_json = f"{self.root}/_lineage/.snapshot={k}.json.tmp"
-            with open(tmp_json, "w") as f:
-                json.dump(lineage, f, indent=2, default=str)
-            os.rename(tmp_json, lineage_path)
+            self._commit_lineage(k, lineage)
         return {
             "snapshots_compacted": snapshots_compacted,
             "files_before": files_before,

@@ -2323,9 +2323,8 @@ def _append_aligned(table, df: DataFrame, op: str):
     """Schema-align update rows to the snapshot table (missing columns
     NULL, unknown columns fail-loud) and append as one snapshot. Returns
     ``None`` without committing when there is nothing to insert — a
-    partitioned write of an empty DataFrame emits only ``_SUCCESS``
-    (unreadable on the append read-back), and an empty snapshot would be
-    pure lineage noise anyway."""
+    partitioned write of an empty DataFrame emits only ``_SUCCESS``, and
+    an empty snapshot would be pure lineage noise."""
     existing = table.load()
     if existing is not None:
         missing = [f for f in existing.schema.fields

@@ -315,22 +315,21 @@ def run_to_snapshot(
     t0 = time.time()
     stage_metrics: dict = {}
     triples = build_triples(spark, todo, config, metrics_out=stage_metrics)
-    # single action: the snapshot write; all metrics come from reading the
-    # (much smaller) written output back, never from re-running the pipeline
+    # single action: the snapshot write; all metrics come from append's one
+    # read-back of the (much smaller) written output, never from re-running
+    # the pipeline
     info = table.append(
         triples,
         extra_metrics=stage_metrics,
         processed_keys=todo.select("url"),
+        count_where={"n_mentions": F.col("pred") == "has_type"},
     )
     wall = time.time() - t0
     # the snapshot is on disk — the persisted in-job intermediates (mentions,
     # forms, mapping) are dead weight from here on; release them so repeated
     # runs in one session don't accumulate cached blocks until eviction
     release_intermediates()
-    written = spark.read.parquet(
-        f"{table.root}/data/snapshot={info.snapshot_id}"
-    )
-    n_mentions = written.filter(F.col("pred") == "has_type").count()
+    n_mentions = info.counts["n_mentions"]
     metrics = {
         "resumed": done is not None,
         "n_docs": n_docs,

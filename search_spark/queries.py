@@ -4572,12 +4572,11 @@ def _q_kg_landmark_closeness(spark, sf_dir):
     )
 
 
-def _landmark_closeness_oracle_sql(
-    n_landmarks: int = _N_LANDMARKS, max_hops: int = _BFS_HOPS
-) -> str:
-    from math import lcm
-
-    unit = lcm(*range(1, max_hops + 1))
+def _landmark_bfs_oracle_ctes(n_landmarks: int, max_hops: int) -> str:
+    """The CTE prefix both landmark oracles share: the mentions/edges
+    views, ``dedges``/``deg``/``lmk`` (landmark selection) and the labeled
+    BFS states ``d0..d{max_hops}``, ending with a newline so the caller
+    appends its final SELECT."""
     parts = [f"""
 dedges AS (SELECT DISTINCT src, dst FROM edges),
 deg AS (SELECT src AS entity, COUNT(*) AS od FROM dedges GROUP BY src),
@@ -4591,8 +4590,17 @@ r{k} AS (SELECT p.landmark, e.dst AS entity, {k} AS dist
 d{k} AS (SELECT landmark, entity, MIN(dist) AS dist
   FROM (SELECT * FROM d{k - 1} UNION ALL SELECT * FROM r{k})
   GROUP BY landmark, entity)""")
+    return f"{_MENTIONS_SQL}, {_EDGES_SQL_BODY}, {','.join(parts)}\n"
+
+
+def _landmark_closeness_oracle_sql(
+    n_landmarks: int = _N_LANDMARKS, max_hops: int = _BFS_HOPS
+) -> str:
+    from math import lcm
+
+    unit = lcm(*range(1, max_hops + 1))
     return (
-        f"{_MENTIONS_SQL}, {_EDGES_SQL_BODY}, {','.join(parts)}\n"
+        f"{_landmark_bfs_oracle_ctes(n_landmarks, max_hops)}"
         f"SELECT entity, CAST(COUNT(*) AS INT) AS n_reached,\n"
         f"       round(SUM(CAST({unit} / dist AS BIGINT)) / {unit}.0, 6)"
         f" AS harmonic\n"
@@ -4625,10 +4633,9 @@ def _q_kg_hop_plot(spark, sf_dir):
 def _hop_plot_oracle_sql(
     n_landmarks: int = _N_LANDMARKS, max_hops: int = _BFS_HOPS
 ) -> str:
-    base = _landmark_closeness_oracle_sql(n_landmarks, max_hops)
-    head = base.rsplit("SELECT entity,", 1)[0]
     return (
-        f"{head}SELECT CAST(dist AS INT) AS dist,"
+        f"{_landmark_bfs_oracle_ctes(n_landmarks, max_hops)}"
+        f"SELECT CAST(dist AS INT) AS dist,"
         f" CAST(COUNT(*) AS BIGINT) AS n_pairs\n"
         f"FROM d{max_hops} GROUP BY dist"
     )

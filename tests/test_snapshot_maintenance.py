@@ -8,6 +8,8 @@ boundaries, time travel, and resume markers all survive.
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 from search_spark.io.snapshots import SnapshotTable
@@ -24,13 +26,30 @@ BATCH_2 = [
 ]
 
 
+@contextlib.contextmanager
+def split_buckets(spark):
+    """A tiny advisory partition size for the block: the bucketed writer's
+    rebalance then splits every bucket across the upstream tasks, leaving
+    several files per bucket directory — what a batch whose buckets
+    outgrow the advisory size writes. The setting is restored after."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "1")
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+
 @pytest.fixture()
 def table(spark, tmp_path):
     t = SnapshotTable(spark, str(tmp_path / "kg"), n_buckets=4)
-    # repartition forces several upstream tasks → multiple files per
-    # bucket directory (the streaming-append small-file pathology)
-    t.append(spark.createDataFrame(BATCH_1, COLS).repartition(6))
-    t.append(spark.createDataFrame(BATCH_2, COLS).repartition(6))
+    with split_buckets(spark):
+        t.append(spark.createDataFrame(BATCH_1, COLS))
+        t.append(spark.createDataFrame(BATCH_2, COLS))
     return t
 
 
@@ -134,6 +153,52 @@ def test_compaction_with_zorder_clusters_files(table, spark):
     assert all(a["zorder_by"] == ["subj", "obj"] for a in audit)
 
 
+def test_zorder_compaction_rewrites_one_file_per_bucket_snapshots(
+    table, spark
+):
+    """A Z-order request is not skipped because a snapshot already has
+    one file per bucket: after a plain compaction, zorder_by rewrites
+    both snapshots and every file comes out in Morton order; repeating
+    the same request is a no-op."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from search_spark.operators.layout import zorder_key
+
+    before_all = _rows(table.load())
+    assert table.compact(min_files_per_bucket=1)["snapshots_compacted"] == 2
+    stats = table.compact(zorder_by=["subj", "obj"])
+    assert stats["snapshots_compacted"] == 2
+    assert _rows(table.load()) == before_all
+    zk = zorder_key(
+        [
+            F.xxhash64(F.col(c)).bitwiseAND(F.lit(0xFFFF))
+            for c in ["subj", "obj"]
+        ]
+    )
+    checked = 0
+    for k in table.snapshots():
+        path = f"{table.root}/data/snapshot={k}"
+        for f in table._data_files(path):
+            zs = [
+                r["z"]
+                for r in spark.read.parquet(os.path.join(path, f))
+                .select(zk.alias("z"))
+                .collect()
+            ]
+            assert zs == sorted(zs)
+            checked += 1
+    assert checked > 0
+    for lin in table.lineage():
+        assert lin["compactions"][-1]["zorder_by"] == ["subj", "obj"]
+    again = table.compact(zorder_by=["subj", "obj"])
+    assert again["snapshots_compacted"] == 0
+    # a delete rewrites the files, so the Z order must be redone
+    table.delete_where(F.col("subj") == "e0")
+    assert table.compact(zorder_by=["subj", "obj"])["snapshots_compacted"] == 1
+
+
 def test_compaction_zorder_numeric_column_sorts_by_value(spark, tmp_path):
     """Numeric zorder_by columns are min/max-scaled, not hashed: rows in
     each rewritten file come out ordered by the actual value, so
@@ -148,7 +213,8 @@ def test_compaction_zorder_numeric_column_sorts_by_value(spark, tmp_path):
         for i in range(60)
     ]
     t = SnapshotTable(spark, str(tmp_path / "kg"), n_buckets=4)
-    t.append(spark.createDataFrame(rows, cols).repartition(6))
+    with split_buckets(spark):
+        t.append(spark.createDataFrame(rows, cols))
     t.compact(min_files_per_bucket=1, zorder_by=["pos"])
 
     checked = 0
