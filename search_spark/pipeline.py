@@ -283,6 +283,12 @@ def build_triples(
     return out
 
 
+def _codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles the driver JVM has run so far."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def run_to_snapshot(
     spark: SparkSession,
     web_pages: DataFrame,
@@ -296,8 +302,14 @@ def run_to_snapshot(
     **left-anti join** — the reference's Luigi ``complete()`` /
     H5-unpopulated-rows resume (SURVEY.md §2.11) in one declarative op.
     Returns the metrics dict (docs/sec, triples/sec, mentions/doc) that the
-    north rule requires per run.
+    north rule requires per run. ``codegen_compiles`` is the number of
+    Janino compiles the driver JVM ran during the call (Spark's
+    ``CodegenMetrics``); in local mode that includes the compiles of
+    tasks, on a cluster only the driver's. It is near 0 when an earlier
+    call in the session already compiled the same plan shapes and the
+    codegen cache kept them. It is not written to lineage.
     """
+    compiles0 = _codegen_compiles(spark)
     table = SnapshotTable(spark, output_root, n_buckets=n_buckets)
     done = table.processed_urls()
     todo = web_pages
@@ -340,9 +352,9 @@ def run_to_snapshot(
         "triples_per_sec": round(info.n_rows / wall, 2),
         "mentions_per_doc": round(n_mentions / n_docs, 3),
         "snapshot_id": info.snapshot_id,
+        "codegen_compiles": _codegen_compiles(spark) - compiles0,
         **stage_metrics,
     }
-    # re-write lineage extra with throughput (lineage file already has counts)
     return metrics
 
 

@@ -51,6 +51,15 @@ _DEFAULTS = {
     # Broadcast threshold: dims (ontology shards, pattern tables, mining
     # schema) are small; 64 MiB keeps them map-side.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Generated-code cache: one 32-doc ingest batch compiles ~166 distinct
+    # classes and a session serving mine/sparql/path/graph requests ~180,
+    # so Spark's 100 entries evict each class before the next batch or
+    # request reuses it and every warm call recompiles. 1000 holds both
+    # working sets together ~3x over. Static conf: it is read once, when
+    # the JVM's CodeGenerator first initializes, so a session not built
+    # here (e.g. the external driver's one handed to
+    # __spark_entry__.entry) keeps 100.
+    "spark.sql.codegen.cache.maxEntries": "1000",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     "spark.ui.enabled": "false",
     # on a real cluster the executors don't inherit the driver env — pin
