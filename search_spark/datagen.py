@@ -427,11 +427,6 @@ def generate_sameas_pairs(
     )
 
 
-def gazetteer_df(spark: SparkSession) -> DataFrame:
-    rows = [(t, e) for e, ts in GAZETTEER.items() for t in ts]
-    return local_df(spark, rows, "pattern string, entity_type string")
-
-
 def mining_schema_df(spark: SparkSession) -> DataFrame:
     return local_df(
         spark,

@@ -11,9 +11,7 @@ every heavy step distributed and JVM-side:
     partial map-side combine) — all later passes run over distinct words
     weighted by count, never over the corpus;
   * each iteration's pair count is one explode + partial-aggregated
-    groupBy; only the **single argmax row** is collected per iteration
-    (the same driver-loop footprint as the Lloyd IVF trainer,
-    operators/ivf.py);
+    groupBy; only the **single argmax row** is collected per iteration;
   * the merge itself is a **zero-UDF codegen expression**: the word's
     symbol sequence is a space-delimited string and each learned merge is
     one ``regexp_replace`` with space lookarounds, so after k merges the

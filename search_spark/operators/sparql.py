@@ -467,24 +467,6 @@ def _parse_path_alt(p: _Parser, max_hops: int) -> PathExpr:
     return expr
 
 
-def _parse_pattern(
-    p: _Parser, paths: bool = False, max_hops: int = PATH_MAX_HOPS
-) -> tuple:
-    """One triple pattern. With ``paths=True`` the predicate position may
-    be a SPARQL 1.1 property path (``^``, ``/``, ``|``, ``+``, ``*``,
-    ``?``, ``{0,k}``, ``{1,k}``, ``!(...)``,
-    parentheses); a path that reduces to one forward predicate stays a
-    plain string so downstream plans are unchanged. Returns
-    ``(subj, pred_or_PathExpr, obj)``."""
-    subj = _parse_term_token(p)
-    pred = _parse_pred(p, paths, max_hops)
-    obj = _parse_term_token(p)
-    _check_path_ends(subj, pred, obj)
-    if p.peek() == ".":
-        p.next()
-    return (subj, pred, obj)
-
-
 def _parse_pred(p: _Parser, paths: bool, max_hops: int) -> object:
     """The predicate position of one triple pattern: a property path
     (when ``paths``), the ``a`` keyword, or a plain term."""

@@ -285,22 +285,29 @@ GROUP BY m.entity_type, o.ontology_source
 
 
 def _q_sentence_filter(spark, sf_dir):
-    # SentenceFilter semantics (sql.py:387-718): length predicates +
-    # language + substring include/exclude, all pushed into the scan.
-    d = _docs(spark, sf_dir)
-    return d.filter(
+    # SentenceFilter semantics (sql.py:387-718): length + language
+    # predicates on the scan, then the operator's case-folded substring
+    # include/exclude (sql.py:542-563).
+    from search_spark.operators.sentence_filter import SentenceFilter
+
+    d = _docs(spark, sf_dir).filter(
         (F.col("lang") == "en")
         & (F.length("text") >= 50)
         & (F.length("text") <= 2000)
-        & F.col("text").contains("spark")
-        & ~F.col("text").contains("slow")
-    ).select("doc_id", "n_chars")
+    )
+    return (
+        SentenceFilter(article_key="doc_id")
+        .include_text("spark")
+        .exclude_text("slow")
+        .apply(d)
+        .select("doc_id", "n_chars")
+    )
 
 
 _SQL_SENTENCE_FILTER = """
 SELECT doc_id, n_chars FROM documents
 WHERE lang = 'en' AND length(text) >= 50 AND length(text) <= 2000
-  AND text LIKE '%spark%' AND text NOT LIKE '%slow%'
+  AND lower(text) LIKE '%spark%' AND lower(text) NOT LIKE '%slow%'
 """
 
 
@@ -1682,8 +1689,7 @@ _PQ_SUBDIM = 16  # dims per subspace (embeddings are 64-dim)
 def _pq_codes_df(spark, sf_dir):
     """(vec_id, subspace, code, qdist): product-quantization code
     assignment. Codebook = the per-label subspace centroids (the same
-    supervised stand-in as `ivf_centroids`; `operators/ivf.train_ivf`
-    is the unsupervised trainer, numpy-parity-tested). Distances are
+    supervised stand-in as `ivf_centroids`). Distances are
     index-order `zip_with`/`aggregate` folds so both engines add in the
     same order; the per-(vector, subspace) argmin is round-then-min —
     the portable two-step."""
@@ -2169,10 +2175,12 @@ def _q_articles_semi_filter(spark, sf_dir):
     # (journal, publish_time) is derived deterministically from doc_id so
     # the oracle can re-derive it; the real parsed-metadata path is
     # articles_stage (extraction/metadata.py), parity-tested in pytest.
+    from search_spark.operators.sentence_filter import SentenceFilter
+
     d = _docs(spark, sf_dir)
     articles = d.select(
         "doc_id",
-        "lang",
+        (F.col("lang") == "en").alias("is_english"),
         "n_chars",
         F.when(F.col("doc_id") % 7 == 0, F.lit(None))
         .otherwise(
@@ -2184,14 +2192,16 @@ def _q_articles_semi_filter(spark, sf_dir):
             ((F.col("doc_id") * 17) % 1500).cast("int"),
         ).alias("publish_time"),
     )
-    keep = articles.filter(
-        F.col("journal").isNotNull()
-        & (F.col("publish_time") >= F.lit("2020-01-01"))
-        & (F.col("publish_time") <= F.lit("2021-12-31"))
-        & (F.col("lang") == "en")
-        & (F.col("n_chars") >= 100)
-    ).select("doc_id")
-    return _tokens(spark, sf_dir).join(keep, on="doc_id", how="left_semi")
+    return (
+        SentenceFilter(article_key="doc_id")
+        .require_english()
+        .require_journal()
+        .date_range(2020, 2021)
+        .apply(
+            _tokens(spark, sf_dir),
+            articles.filter(F.col("n_chars") >= 100),
+        )
+    )
 
 
 _SQL_ARTICLES_SEMI_FILTER = f"""

@@ -29,9 +29,10 @@ def test_filter_pushdown_and_column_pruning(spark):
 
     df = QUERIES["sentence_filter"].spark(spark, SF_DIR)
     plan = plan_of(df)
-    assert "PushedFilters" in plan
-    # lang equality must reach the scan
-    assert "EqualTo(lang,en)" in plan.replace(" ", "") or "lang" in plan
+    # lang equality must reach the scan (the case-folded text matches are
+    # not pushed as StringContains, so they are not asserted on)
+    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
+    assert pushed and "EqualTo(lang,en)" in pushed[0].replace(" ", "")
     # projection pruned: html-sized columns never read (documents table has
     # doc_id,text,lang,source,n_chars; we select doc_id,n_chars + filters)
     read_schema = [l for l in plan.splitlines() if "ReadSchema" in l]
